@@ -189,7 +189,8 @@ def main() -> int:
                    "streaming_breakdown": streaming_breakdown,
                    "runs": runs}
     here = os.path.dirname(os.path.abspath(__file__))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
     for fname in ("BENCH_DETAIL.json", f"BENCH_DETAIL_c{cpus}.json"):
         with open(os.path.join(here, fname), "w") as fh:
             json.dump(detail, fh, indent=1)

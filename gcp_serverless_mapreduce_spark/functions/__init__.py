@@ -8,8 +8,9 @@ from .text import (  # noqa: F401
     STOPWORDS,
     anagram_signature,
     normalize_word,
+    split_tokens,
     strip_gutenberg,
-    tokenize,
+    tokens,
 )
 from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401
 from .hashing import fnv32a, md5_long, minhash_expr  # noqa: F401

@@ -3,8 +3,7 @@
 Reference parity map (all as Column expressions, JVM-side):
 
 - P1 strip_gutenberg      <- removeBookHeaderAndFooter, mapphase/split.go:90-116
-- P2 tokenize             <- strings.Fields split,     mapphase/split.go:68
-- P3 lower                <- strings.ToLower,          mapphase/split.go:126
+- P2+P3 tokens            <- strings.Fields + ToLower, mapphase/split.go:68, :126
 - P5 trim_non_letters     <- trimNonAlphabeticCharacters, mapphase/map.go:118-139
 - P6 STOPWORDS membership <- 185-entry stop-word set,  mapphase/map.go:84-107
 - P7 letters-only rlike   <- containsOnlyLetters,      mapphase/map.go:142-151
@@ -18,6 +17,8 @@ map_test.go:135-181 in tests/test_text_functions.py.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -81,13 +82,46 @@ def strip_gutenberg(text: Column) -> Column:
     )
 
 
-def tokenize(text: Column) -> Column:
-    """P2: strings.Fields — split on whitespace runs, no empty tokens.
+# The package's one tokenization pattern (P2+P3): lowercase, trim SPACES
+# (Spark's ``trim`` default), split on runs of Java ``\s``.  Every other
+# module takes its tokens from the faces below.
+#
+# Java ``\s`` is the ASCII class [ \t\n\x0b\f\r]: U+000B splits, Unicode
+# whitespace (NBSP, U+2028) does not.  The DuckDB oracle's
+# ``string_split_regex(trim(lower(text)), '\s+')`` is NOT the same
+# function: RE2 ``\s`` lacks U+000B, DuckDB ``trim`` also strips NBSP, and
+# its ``lower`` is the simple case mapping (no final sigma, İ -> i rather
+# than i + U+0307).  tests/test_r16_unicode_tokens.py runs both engines and
+# pins each of these differences.
+_WS_PY = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    Returns array<string>.  ``split`` on ``\\s+`` leaves a leading empty
-    token when the text starts with whitespace; filter mirrors Fields.
-    """
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
+
+def split_tokens(text: Column) -> Column:
+    """``split(trim(lower(text)), '\\s+')`` as array<string>, empty tokens
+    KEPT: text opening or closing with non-space whitespace yields an empty
+    first/last token, and '' yields ['']; NULL stays NULL."""
+    return F.split(F.trim(F.lower(text)), r"\s+")
+
+
+def tokens(text: Column) -> Column:
+    """:func:`split_tokens` without the empty tokens: the reference's
+    strings.Fields + ToLower (split.go:68, :126), on Java ``\\s``."""
+    return F.filter(split_tokens(text), lambda w: w != "")
+
+
+def split_tokens_py(text: str | None) -> list[str]:
+    """EXACT Python twin of :func:`split_tokens` for Arrow kernels and
+    UDTFs: lowercase first, strip spaces only, split on the Java ``\\s``
+    class (not ``str.split``'s Unicode set), empty tokens kept.  NULL is
+    the caller's branch: the expression twins route it through
+    ``size(NULL) = -1`` guards to an empty array."""
+    return _WS_PY.split((text or "").lower().strip(" "))
+
+
+def split_tokens_sql(text_col: str) -> str:
+    """Spark SQL string twin of :func:`split_tokens` over column
+    ``text_col``, for ``F.expr`` bodies."""
+    return f"split(trim(lower({text_col})), '\\\\s+')"
 
 
 def trim_non_letters(word: Column) -> Column:

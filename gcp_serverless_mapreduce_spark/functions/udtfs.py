@@ -17,17 +17,19 @@ from pyspark.sql.functions import udtf
 class WordBigrams:
     """text -> one row per consecutive word pair (order-preserving,
     NON-distinct — the multiset, unlike the dedup shingle set).
-    Tokenization is the oracle's exact ``split(trim(lower(text)),
-    '\\s+')`` semantics (operators.dedup.py_tokens: empty tokens kept,
-    ASCII whitespace class — not Python str.split's Unicode set)."""
+    Tokens are exactly functions.text.split_tokens, through its Python
+    twin ``split_tokens_py`` (empty tokens kept, Java whitespace class —
+    not Python str.split's Unicode set)."""
 
     def eval(self, text: str):  # noqa: D102
         if text is None:
             return
         # absolute import: the class is cloudpickled to UDTF workers,
         # where relative-import context is not guaranteed
-        from gcp_serverless_mapreduce_spark.operators.dedup import py_tokens
-        toks = py_tokens(text)
+        from gcp_serverless_mapreduce_spark.functions.text import (
+            split_tokens_py,
+        )
+        toks = split_tokens_py(text)
         for i in range(len(toks) - 1):
             yield i, f"{toks[i]} {toks[i + 1]}"
 

@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import bigram_structs, tokens
+from ..functions.text import tokens
+from .textstats import bigram_structs
 
 # Deliberately simple, engine-portable patterns (identical semantics in
 # Java regex and DuckDB's RE2): a production deployment would swap in a

@@ -25,45 +25,20 @@ Scale design:
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.text import (
+    split_tokens,
+    split_tokens_py,
+    split_tokens_sql,
+    tokens,
+)
+
 HEX = "0123456789abcdef"
-
-
-def tokens_col(text_col: str = "text"):
-    """Lowered whitespace tokens as array<string> (P2+P3 generalized)."""
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-
-
-# Java/RE2 '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
-# Python str.split()'s Unicode whitespace set (U+00A0, U+2028, ...).
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
-def py_tokens(text: str | None) -> list[str]:
-    """EXACT Python twin of :func:`tokens_col` =
-    ``split(trim(lower(text)), '\\s+')`` — the tokenization the oracle
-    SQL declares (DuckDB ``string_split_regex(trim(lower(text)),
-    '\\s+')``; RE2 and Java agree on the ASCII ``\\s`` class).
-
-    Semantics reproduced exactly, not just on ASCII (r15 verdict task 4
-    / ADVICE): lowercase first; trim strips SPACES only (Spark/DuckDB
-    ``trim`` default); the split KEEPS empty tokens, so leading/trailing
-    non-space whitespace yields the same empty first/last token the JVM
-    expression emits, and Unicode whitespace does NOT split.  The
-    previous ``str.strip().lower().split()`` silently diverged on
-    leading tabs, trailing newlines and NBSP — fine on the fixtures'
-    ASCII, wrong at 100 TB of real text.  Callers that need the
-    empty-filtered variant (textstats.tokens) filter the result.
-    NULL text is the CALLER's branch: the expression twins all route
-    NULL through ``size(NULL) = -1`` guards to an empty array."""
-    return _JAVA_WS.split((text or "").lower().strip(" "))
 
 
 def shingle_array(k: int = 3, text_col: str = "text", arrow: bool = True):
@@ -87,7 +62,7 @@ def shingle_array(k: int = 3, text_col: str = "text", arrow: bool = True):
       DESCENDS when n < 1, so short docs need the explicit empty array
       (DuckDB's generate_series is empty there).
 
-    Token semantics are EXACT (:func:`py_tokens` == ``tokens_col``,
+    Token semantics are EXACT (``split_tokens_py`` == ``split_tokens``,
     empty tokens kept), not merely ASCII-equivalent; NULL text takes the
     expression twin's ``size(NULL)``-guard branch to an empty array.
     """
@@ -99,17 +74,18 @@ def shingle_array(k: int = 3, text_col: str = "text", arrow: bool = True):
                 if t is None:
                     out.append([])
                     continue
-                toks = py_tokens(t)
+                toks = split_tokens_py(t)
                 out.append(list({" ".join(toks[i:i + k])
                                  for i in range(len(toks) - k + 1)}))
             return pd.Series(out)
 
         return _shingles(text_col)
+    toks = split_tokens_sql(text_col)
     shingles = F.when(
-        F.size(tokens_col(text_col)) >= k,
+        F.size(split_tokens(F.col(text_col))) >= k,
         F.expr(
-            f"transform(sequence(1, size({_toks_sql(text_col)}) - {k - 1}), "
-            f"i -> concat_ws(' ', slice({_toks_sql(text_col)}, i, {k})))"
+            f"transform(sequence(1, size({toks}) - {k - 1}), "
+            f"i -> concat_ws(' ', slice({toks}, i, {k})))"
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.array_distinct(shingles)
@@ -160,10 +136,6 @@ def word_shingles(docs: DataFrame, k: int = 3,
             .select(F.col(doc_col).alias("doc"),
                     F.explode(shingle_array(k, text_col)).alias("shingle"))
             .filter(F.col("shingle").isNotNull()))
-
-
-def _toks_sql(text_col: str) -> str:
-    return f"split(trim(lower({text_col})), '\\\\s+')"
 
 
 def minhash_signatures(docs: DataFrame, num_perm: int = 8, k: int = 3,
@@ -264,7 +236,7 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
                 if t is None:
                     out.append([])
                     continue
-                toks = py_tokens(t)
+                toks = split_tokens_py(t)
                 sh = {" ".join(toks[i:i + k])
                       for i in range(len(toks) - k + 1)}
                 if not sh:
@@ -282,7 +254,7 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
             return pd.Series(out)
 
         return _bands(text_col)
-    toks = _toks_sql(text_col)
+    toks = split_tokens_sql(text_col)
 
     def sh(var: str) -> str:
         return (f"array_distinct(IF(size({toks}) >= {k}, "
@@ -557,8 +529,7 @@ def simhash_bits(docs: DataFrame, n_bits: int, doc_col: str = "doc_id",
     """
     if not 1 <= n_bits <= 60:
         raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
-    uniq = F.array_distinct(
-        F.filter(tokens_col(text_col), lambda t: t != ""))
+    uniq = F.array_distinct(tokens(F.col(text_col)))
     # Spread before the tokenize+md5 explode (integer bit sums are
     # partitioning-independent) — see word_shingles.
     from ..tables import spread_small_scan
@@ -924,7 +895,7 @@ def ladder_tagged_grams(ns: tuple[int, ...], text_col: str = "text"):
     tests/test_r15_batch8.py).  Docs shorter than a rung contribute no
     grams for that rung; shorter than min(ns), an empty array (the old
     pre-explode size filter, folded in).  Token semantics are EXACT
-    (:func:`py_tokens` == the twin's ``tokens_col``, empty tokens kept
+    (``split_tokens_py`` == the twin's ``split_tokens``, empty tokens kept
     — not just ASCII-equivalent; r15 verdict task 4 / ADVICE); NULL
     text takes the twin's ``size(NULL)``-guard branch to []."""
     lo = min(ns)
@@ -933,7 +904,7 @@ def ladder_tagged_grams(ns: tuple[int, ...], text_col: str = "text"):
     def _ladder(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            toks = [] if t is None else py_tokens(t)
+            toks = [] if t is None else split_tokens_py(t)
             if len(toks) < lo:
                 out.append([])
                 continue
@@ -960,7 +931,7 @@ def ladder_tagged_grams_expr(ns: tuple[int, ...], text_col: str = "text"):
     reference (and for JVM-only contexts).  NB: transform() lambdas
     must stay single-parameter — a second parameter is interpreted as
     the ELEMENT INDEX by Spark."""
-    toks = tokens_col(text_col)
+    toks = split_tokens(F.col(text_col))
 
     def _tagged(n: int):
         grams_n = F.array_distinct(F.transform(
@@ -1061,7 +1032,7 @@ def max_shared_span_exact(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
              .select(F.col(doc_col).alias("doc"),
-                     tokens_col(text_col).alias("toks")))
+                     split_tokens(F.col(text_col)).alias("toks")))
 
     @pandas_udf("long")
     def exact_span(ta: pd.Series, tb: pd.Series,
@@ -1247,7 +1218,7 @@ def substring_discard_manifest(docs: DataFrame, min_len: int = 8,
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
              .select(F.col(doc_col).alias("doc"),
-                     tokens_col(text_col).alias("toks")))
+                     split_tokens(F.col(text_col)).alias("toks")))
 
     @pandas_udf("array<struct<s:long,e:long>>")
     def drop_ranges(ta: pd.Series, tb: pd.Series) -> pd.Series:

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import tokens
+from ..functions.text import tokens
 
 # Sorted-neighborhood geometry.
 SN_WINDOW = 5          # compare each doc to its 5 successors

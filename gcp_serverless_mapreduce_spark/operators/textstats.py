@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 # Marker-word profiles for the n-gram/stopword language heuristic.  Tiny on
 # purpose: the operator's shape (per-lang hit counts -> argmax) is what
 # scales; real deployments swap in full frequency profiles.
@@ -33,11 +35,6 @@ BPE_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 FP_MOD = 1_000_000_007
 FP_SEED = 7
 FP_MULT = 31
-
-
-def tokens(text: Column) -> Column:
-    """Lowered whitespace tokens, no empties (P2+P3 generalized)."""
-    return F.filter(F.split(F.trim(F.lower(text)), r"\s+"), lambda w: w != "")
 
 
 def lang_hits(toks: Column, lang: str) -> Column:

@@ -533,7 +533,6 @@ def run_available_now_mapped(source: DataFrame, transform, name: str,
 
 
 def run_rate_replay(result: DataFrame, name: str, n_expected: int,
-                    count_col: str = "n_events",
                     timeout_s: float = 180.0) -> DataFrame:
     """Execute a rate-source streaming aggregate until it has absorbed
     ``n_expected`` input rows, then snapshot the memory sink.
@@ -550,14 +549,14 @@ def run_rate_replay(result: DataFrame, name: str, n_expected: int,
     ``n_expected`` is the one that absorbed the last fixture row; its
     memory-sink commit precedes its progress entry, so the sink is
     complete when the probe fires — the same moment the previous
-    sink-aggregation poll (``sum(count_col) == n_expected``) observed.
+    sink-aggregation poll (sum of the sink's counts == ``n_expected``)
+    observed.
 
     r16 (verdict task 1): the old probe ran a ~70 ms Spark
     job over the sink every 50 ms — decomposing the pyds row showed
     25-47 poll jobs RACING the micro-batches for cores, 1.8-6.2 s of
     a 3-6 s wall, and all of its core-count anti-scaling and attempt
-    spread.  ``count_col`` is kept for API stability (the sink column
-    a manual probe would read; unused by the progress probe).
+    spread.
 
     This is purely a replay-adapter harness; a real Kafka/Pub/Sub
     deployment runs the same transform with a normal long-lived

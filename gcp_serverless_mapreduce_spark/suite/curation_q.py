@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators import curation
 from ..registry import register
 from ..tables import load_table
@@ -744,7 +745,6 @@ def source_boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix — then a per-source window over the distinct-prefix counts.
     Deterministic modal tie-break (max count, then lexicographic
     prefix) keeps both engines on the same winner."""
-    from ..operators.textstats import tokens
     docs = load_table(spark, sf_dir, "documents")
     toked = docs.select("source", tokens(F.col("text")).alias("toks"))
     out = None

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators import dedup
 from ..registry import register
 from ..tables import load_table
@@ -587,8 +588,6 @@ def symspell_handle_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on single-deletion variants (O(total variants) shuffle,
     hot variants capped at {SYMSPELL_MAX_BUCKET}), NEVER a quadratic
     levenshtein cross join."""
-    from ..operators.textstats import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     handle = F.concat(F.element_at(tokens(F.col("text")), 1),
@@ -841,8 +840,6 @@ def dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the CC itself."""
     from pyspark.sql import Window
 
-    from ..operators import textstats
-
     docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, NUM_PERM)
     pairs = dedup.lsh_candidate_pairs(sig, BANDS, ROWS_PER_BAND,
@@ -850,7 +847,7 @@ def dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = dedup.dup_clusters(pairs)
     uq = docs.select(
         "doc_id",
-        F.size(F.array_distinct(textstats.tokens(F.col("text"))))
+        F.size(F.array_distinct(tokens(F.col("text"))))
         .cast("long").alias("n_uniq_tokens"))
     mem = clusters.join(uq, "doc_id")
     by_cluster = Window.partitionBy("cluster_id")

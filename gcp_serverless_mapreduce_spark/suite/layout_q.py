@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import layout, textstats
+from ..functions.text import tokens
+from ..operators import layout
 from ..registry import register
 from ..tables import load_table
 from .textstats_q import _TOKS
@@ -122,7 +123,7 @@ def length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.size(textstats.tokens(F.col("text"))).cast("long")
+        F.size(tokens(F.col("text"))).cast("long")
         .alias("n_toks"))
     b = base.withColumn(
         "bucket", F.ntile(LEN_BUCKETS).over(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import split_tokens
 from ..operators import multimodal
 from ..registry import register
 from ..tables import load_table
@@ -539,7 +540,7 @@ def crossmodal_pair_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     decoded = multimodal.decode_image_stats(
         multimodal.image_corpus(docs)).select("media_id", "px_w", "px_h")
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = split_tokens(F.col("text"))
     cap = docs.select(
         F.col("doc_id"), "source",
         F.size(toks).alias("n_toks"),

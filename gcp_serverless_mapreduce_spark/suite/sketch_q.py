@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..operators import sketches
 from ..operators.sketches import (CMS_DEPTH, CMS_WIDTH, HLL_M, HLL_MAX_RHO,
                                   HLL_NUMER, HLL_REST_MOD, KMV_HEX_DIGITS,
@@ -64,7 +65,6 @@ def cms_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS point estimates are one-sided (est >= exact), which the oracle
     reproduces exactly, collisions included."""
     docs = load_table(spark, sf_dir, "documents")
-    from ..operators.textstats import tokens
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("key"))
     sketch = sketches.cms_build(toks)
     cand = toks.groupBy("key").agg(

@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS
+from ..functions.text import STOPWORDS, split_tokens_py, tokens
 from ..operators import dedup, textstats
 from ..registry import register
 from ..tables import load_table
@@ -108,7 +108,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, mean token length, alpha ratio, stop-word ratio, length gate.
     One scan, one projection — no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = textstats.tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     d = docs.withColumn("toks", toks)
     n = F.size("toks")
     nchars = F.length("text")
@@ -144,7 +144,7 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting per source: whitespace tokens vs BPE-ish
     pre-tokens.  Map-side partial agg -> tiny shuffle on source."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = docs.withColumn("toks", tokens(F.col("text")))
     ws = F.sum(F.size("toks").cast("long"))
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -204,7 +204,7 @@ def docs_per_word_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(textstats.tokens(F.col("text"))))
+        F.explode(F.array_distinct(tokens(F.col("text"))))
         .alias("word"))
     return salted_distinct_count(pairs, key="word", value="doc_id",
                                  out_col="n_docs")
@@ -334,7 +334,7 @@ def word_commonness_by_source_salted(spark: SparkSession, sf_dir: str) -> DataFr
     from ..operators.skew import salted_equijoin
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (docs.withColumn("toks", textstats.tokens(F.col("text")))
+    pairs = (docs.withColumn("toks", tokens(F.col("text")))
              .select("source", "doc_id", F.explode("toks").alias("word")))
     # vocabulary-sized; materialized once so the join doesn't recompute
     # the corpus explode on its build side
@@ -418,7 +418,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders by the raw double score with term as the tie-break; both
     engines compute ln() of identical IEEE inputs."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = docs.withColumn("toks", tokens(F.col("text")))
     n_total = docs.agg(F.count("*").alias("n"))
     tdc = (d.select("source", "doc_id", F.explode("toks").alias("term"))
            .groupBy("term", "doc_id", "source")
@@ -442,9 +442,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _repetition_stats_kernel():
     """Arrow kernel emitting the EXACT integer repetition stats per doc:
     (n_tokens, n_distinct, top_bg = most-frequent-bigram count, n_bg).
-    Tokenization is EXACT vs textstats.tokens (dedup.py_tokens with
-    empties filtered — the Java/RE2 ASCII whitespace class, space-only
-    trim, JVM-identical on non-ASCII text too; r15 verdict task 4);
+    Tokenization is EXACT vs functions.text.tokens (split_tokens_py
+    with empties filtered — the Java whitespace class, space-only trim,
+    JVM-identical on non-ASCII text too; r15 verdict task 4);
     pinned vs the old HOF pipeline in tests/test_r15_batch2.py and on
     non-ASCII rows in tests/test_r16_unicode_tokens.py."""
     from collections import Counter
@@ -455,7 +455,7 @@ def _repetition_stats_kernel():
     def rep_stats(texts: pd.Series) -> pd.DataFrame:
         rows = []
         for t in texts:
-            toks = [w for w in dedup.py_tokens(t) if w]
+            toks = [w for w in split_tokens_py(t) if w]
             n = len(toks)
             if n >= 2:
                 bigrams = [toks[i] + " " + toks[i + 1]
@@ -506,7 +506,7 @@ def repetition_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer stats (token/distinct/bigram counts); every double
     # (fractions, round, keep) is still computed by the same JVM
     # expressions as before from those integers, so results are
-    # bit-identical.  Tokenization matches textstats.tokens on the ASCII
+    # bit-identical.  Tokenization matches functions.text.tokens on the ASCII
     # fixtures exactly as operators/dedup.shingle_array does.
     from ..tables import spread_small_scan
 
@@ -556,7 +556,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform keys — no skew); the final rollup is a partial+final agg on a
     tiny key space.  Nothing in the chain materializes the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = textstats.tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     d = docs.withColumn("toks", toks)
     n = F.size("toks")
     alpha_ratio = (
@@ -618,7 +618,7 @@ def bigram_coherence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     d = (spread_small_scan(docs)
-         .withColumn("toks", textstats.tokens(F.col("text")))
+         .withColumn("toks", tokens(F.col("text")))
          .filter(F.size("toks") >= 2))
     bg = d.select(
         "doc_id",
@@ -788,7 +788,7 @@ def doc_token_ids_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     vocab = textstats.build_vocab(docs, VOCAB_SIZE).select("word", "vocab_id")
     toks = (docs.select("doc_id",
-                        F.posexplode(textstats.tokens(F.col("text")))
+                        F.posexplode(tokens(F.col("text")))
                         .alias("i", "word")))
     ids = (toks.join(F.broadcast(vocab), "word", "left")
            .select("doc_id", "i",
@@ -960,7 +960,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = textstats.bpe_piece_stats(docs)
     toks = docs.select(
         "doc_id", "lang",
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_toks"))
+        F.size(tokens(F.col("text"))).cast("long").alias("n_toks"))
     def safe(c):
         return F.nullif(c.cast("double"), F.lit(0.0))
 

@@ -92,24 +92,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     epochs are naive/UTC.
 
     The resolved DataFrame is MEMOIZED per (application, path, file
-    mtime) — the no-catalog analogue of a metastore (r16 verdict task
-    2): Spark resolves ``spark.table("t")`` once per session, while a
+    mtime in ns, file size) — the no-catalog analogue of a metastore
+    (r16 verdict task 2): Spark resolves ``spark.table("t")`` once per session, while a
     bare-path ``spark.read.parquet`` re-lists the directory, re-reads
     footer schema and re-runs the dtype-normalization py4j chatter on
     EVERY call (measured ~70 ms; the suite makes hundreds of load_table
     calls per bench pass).  The memo holds a PLAN (scan + timestamp-
     normalization projections), never data — every action on it still
     scans parquet, so no result is ever cached; a regenerated fixture
-    file invalidates its entry via the mtime key, and entries never
+    file invalidates its entry via the (mtime, size) key — both from one
+    ``os.stat``, so a rewrite inside one float-mtime tick or with its
+    mtime restored still misses if its size changed — and entries never
     leak across Spark applications.
     """
     apply_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        mtime = os.path.getmtime(path)
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
+        stamp = None
+    key = (spark.sparkContext.applicationId, path, stamp)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached

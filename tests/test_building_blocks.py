@@ -50,8 +50,8 @@ def test_word_bigrams_udtf_eval():
 
 
 def test_lang_hits_counts_multiset(spark):
-    from gcp_serverless_mapreduce_spark.operators.textstats import (
-        lang_hits, tokens)
+    from gcp_serverless_mapreduce_spark.functions.text import tokens
+    from gcp_serverless_mapreduce_spark.operators.textstats import lang_hits
 
     df = spark.createDataFrame([("the cat and the hat is here",)], ["text"])
     row = df.select(

@@ -1,37 +1,37 @@
-"""Partition-policy math + multi-format source round-trips."""
+"""Table loading and multi-format source round-trips."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_mapreduce_spark.plans.policy import (
-    MAX_PARTITIONS,
-    configure_for_input,
-    shuffle_partitions_for,
-)
 from gcp_serverless_mapreduce_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_shuffle_partition_policy_bounds():
-    # tiny input -> floor of 2x cores
-    assert shuffle_partitions_for(1 << 20, cores=32) == 64
-    # 1 TiB shuffle at 128 MiB targets -> 8192 partitions
-    assert shuffle_partitions_for(1 << 40, cores=32) == 8192
-    # absurd input clamps at the ceiling
-    assert shuffle_partitions_for(1 << 60, cores=32) == MAX_PARTITIONS
+def test_load_table_memo_sees_in_place_rewrite(spark, tmp_path):
+    """A parquet file rewritten in place with a different row count must
+    not be served from the load_table memo, even when the rewrite keeps
+    the old mtime to the nanosecond (the memo key carries the size)."""
+    import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-def test_configure_for_input_sets_conf(spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = configure_for_input(spark, 100 << 30)  # 100 GiB input
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-        assert n >= 2 * spark.sparkContext.defaultParallelism
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": list(range(3))}), path)
+    old_ns = os.stat(path).st_mtime_ns
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+
+    # Many row groups: a plan still holding the old file length would
+    # read only the row groups that start inside it.
+    pq.write_table(pa.table({"x": list(range(5000))}), path,
+                   row_group_size=100)
+    os.utime(path, ns=(old_ns, old_ns))
+    assert os.stat(path).st_mtime_ns == old_ns
+    got = load_table(spark, str(tmp_path), "t")
+    assert sorted(r["x"] for r in got.collect()) == list(range(5000))
 
 
 def test_csv_and_json_source_roundtrip(spark, tmp_path):

@@ -5,22 +5,35 @@ which differs from the declared ``split(trim(lower(text)), '\\s+')``
 semantics on leading/trailing non-space whitespace (JVM keeps the empty
 token), Unicode whitespace (Python splits NBSP/U+2028, Java/RE2 ``\\s``
 does not) and potentially non-ASCII case folds (r15 verdict task 4,
-ADVICE medium).  ``operators.dedup.py_tokens`` now reproduces the JVM
+ADVICE medium).  ``functions.text.split_tokens_py`` reproduces the JVM
 semantics exactly; these pins hold every kernel/expression-twin pair to
-equality ON the divergent inputs the r15 pins omitted.
+equality ON the divergent inputs the r15 pins omitted.  The last pins run
+the same rows through the DuckDB oracle's tokenizer and the anagram
+Splitter.
 """
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
+from gcp_serverless_mapreduce_spark.functions.text import (
+    split_tokens,
+    split_tokens_py,
+    split_tokens_sql,
+    strip_gutenberg,
+)
 from gcp_serverless_mapreduce_spark.operators import dedup
+from gcp_serverless_mapreduce_spark.operators.anagram import (
+    tokenize_documents,
+)
 
 # Exactly the classes of text where str.split() and the JVM expression
 # disagree: leading tab, trailing newline, CR/LF + trailing tab mix,
 # vertical tab (split by BOTH — x0b is in Java \s), NBSP and U+2028
 # LINE SEPARATOR (split by str.split, NOT by Java \s), Turkish dotted
 # capital I and dotless i, sharp s / capital sharp s, Greek final
-# sigma, plus plain-space padding (trimmed by both).
+# sigma, NBSP padding (not trimmed by Spark) and plain-space padding
+# (trimmed by both).
 UNICODE_ROWS = [
     (9101, "\ta b c d e f g h i"),
     (9102, "a b c d e f g h i\n"),
@@ -39,16 +52,18 @@ SCHEMA = "doc_id long, text string"
 
 
 def test_py_tokens_matches_tokens_col(spark):
-    """The helper itself == split(trim(lower(text)), '\\s+') per row."""
+    """split_tokens_py == split_tokens, i.e. split(trim(lower(text)),
+    '\\s+'), per row."""
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     got = {r["doc_id"]: r["t"]
            for r in df.select("doc_id",
-                              dedup.tokens_col("text").alias("t")).collect()}
+                              split_tokens(F.col("text")).alias("t"))
+           .collect()}
     for doc_id, text in UNICODE_ROWS:
         if text is None:
             assert got[doc_id] is None
         else:
-            assert got[doc_id] == dedup.py_tokens(text), (doc_id, text)
+            assert got[doc_id] == split_tokens_py(text), (doc_id, text)
 
 
 def test_shingle_kernel_matches_expr_twin_unicode(spark):
@@ -113,15 +128,88 @@ def test_word_bigrams_udtf_matches_oracle_tokens(spark):
         (r["bigram"],) for r in spark.sql(
             "SELECT b.bigram FROM unicode_docs_udtf, "
             "LATERAL word_bigrams(text) AS b").collect())
-    toks = dedup.tokens_col("text")
+    toks = split_tokens(F.col("text"))
     want = sorted(
         (r["bigram"],) for r in df.select(
             F.explode(F.when(
                 F.size(toks) >= 2,
                 F.expr("transform(sequence(1, "
-                       f"size({dedup._toks_sql('text')}) - 1), "
+                       f"size({split_tokens_sql('text')}) - 1), "
                        f"i -> concat_ws(' ', slice("
-                       f"{dedup._toks_sql('text')}, i, 2)))"))
+                       f"{split_tokens_sql('text')}, i, 2)))"))
               .otherwise(F.array().cast("array<string>"))).alias("bigram"))
         .collect())
     assert got == want
+
+
+# Where Spark's split(trim(lower(text)), '\s+') and DuckDB's
+# string_split_regex(trim(lower(text)), '\s+') disagree on UNICODE_ROWS,
+# as (JVM tokens, DuckDB tokens).  Java \s has U+000B and RE2 \s does
+# not; DuckDB trim strips NBSP; DuckDB lower is the simple case mapping
+# (İ -> i, no final sigma) where the JVM's is the full one.
+ENGINE_VS_ORACLE = {
+    9104: (list("abcdefghi"), ["a\x0bb"] + list("cdefghi")),
+    9107: (["\u00a0a"] + list("bcdefgh") + ["i\u00a0"], list("abcdefghi")),
+    9108: (["i\u0307stanbul", "ı", "i"] + list("bcdefg"),
+           ["istanbul", "ı", "i"] + list("bcdefg")),
+    9109: (["straße", "straße", "σοφος"] + list("cde"),
+           ["straße", "straße", "σοφοσ"] + list("cde")),
+}
+
+
+def test_split_tokens_vs_duckdb_oracle_unicode(spark):
+    """Run both engines' tokenizers on UNICODE_ROWS: equal on every row
+    but the pinned ENGINE_VS_ORACLE ones, which must still show exactly
+    the recorded divergence — a change on either side fails here."""
+    df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
+    jvm = {r["doc_id"]: r["t"] for r in df.select(
+        "doc_id", split_tokens(F.col("text")).alias("t")).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", UNICODE_ROWS)
+    oracle = dict(con.execute(
+        "SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') "
+        "FROM docs").fetchall())
+    con.close()
+    assert jvm.keys() == oracle.keys()
+    for doc_id in jvm:
+        if doc_id in ENGINE_VS_ORACLE:
+            assert (jvm[doc_id], oracle[doc_id]) \
+                == ENGINE_VS_ORACLE[doc_id], doc_id
+        else:
+            assert jvm[doc_id] == oracle[doc_id], doc_id
+
+
+GUTENBERG_ROW = (
+    9113,
+    "PRODUCED BY Junk\n*** START OF THIS PROJECT GUTENBERG EBOOK SOFOS ***\n"
+    "The ΣΟΦΟΣ Fox\x0bjumps İstanbul the\tend\n"
+    "End of the Project Gutenberg EBook TRAILER words")
+
+
+def test_tokenize_documents_matches_pre_fold_expression(spark):
+    """The anagram Splitter lowercases the document once, before the
+    split; it used to lowercase each token after the split.  Both must
+    give the same distinct words, Gutenberg strip included: the strip
+    has to stay ahead of the lowercase because its markers are
+    upper-case."""
+    df = spark.createDataFrame(UNICODE_ROWS + [GUTENBERG_ROW], SCHEMA)
+
+    def old_words(gutenberg: bool):
+        text = F.col("text")
+        if gutenberg:
+            text = strip_gutenberg(text)
+        words = F.array_distinct(F.transform(
+            F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != ""),
+            F.lower))
+        return sorted(tuple(r) for r in df.select(
+            "doc_id", F.explode(words).alias("word")).collect())
+
+    for gutenberg in (False, True):
+        got = sorted(tuple(r) for r in tokenize_documents(
+            df, gutenberg=gutenberg).collect())
+        assert got == old_words(gutenberg), gutenberg
+    stripped = {w for d, w in tokenize_documents(df, gutenberg=True)
+                .collect() if d == 9113}
+    assert stripped == {"the", "σοφος", "fox", "jumps", "i\u0307stanbul",
+                        "end"}

@@ -10,7 +10,7 @@ from gcp_serverless_mapreduce_spark.functions.text import (
     anagram_signature,
     normalize_word,
     strip_gutenberg,
-    tokenize,
+    tokens,
 )
 
 
@@ -45,8 +45,8 @@ def test_anagram_signature(spark):
 
 def test_tokenize_fields_semantics(spark):
     df = spark.createDataFrame([("  The quick\nbrown\t fox  ",)], ["t"])
-    got = df.select(tokenize(F.col("t")).alias("toks")).first()["toks"]
-    assert got == ["The", "quick", "brown", "fox"]
+    got = df.select(tokens(F.col("t")).alias("toks")).first()["toks"]
+    assert got == ["the", "quick", "brown", "fox"]
 
 
 HEADER_TEXT = (
